@@ -28,57 +28,60 @@ final class KernelStats {
     confHist(b) += 1
   }
 
-  def addHist(h: Array[Long]): Unit = {
+  def addHist(h: collection.Seq[Long]): Unit = {
     var i = 0
     while (i < 10) { confHist(i) += h(i); i += 1 }
   }
 }
 
-/** The fused extraction kernel: one document in, its extracted span
-  * sequence out. Runs inside a single Catalyst-planned mapPartitions stage
-  * (SURVEY §3.1 "Spark lifecycle equivalent") so the interleaving
-  * invariant is enforced in exactly one place (§2.10).
+/** The extraction kernel: one document in, its extracted span sequence
+  * out. Both routes of [[graft.pipeline.ExtractJob.extract]] call it, so
+  * the cover drop and the span dispatch live in exactly one place
+  * (SURVEY §2.10).
   */
 object ExtractKernel {
 
-  /** Extract one document:
-    *  - spans processed in offset order (interleaving preserved);
-    *  - the first media span (the cover page) is dropped — the reference
-    *    never processes page 1 (pdf_parser.py:126, :161; orc_script cell 3
-    *    reads reader.pages[1:]);
+  /** The doc's spans in offset order with the first media span (the cover
+    * page) dropped — the reference never processes page 1
+    * (pdf_parser.py:126, :161; orc_script cell 3 reads reader.pages[1:]). */
+  def content(doc: Doc): Doc = {
+    val ordered = doc.spans.sortBy(_.offset)
+    val coverIdx = ordered.indexWhere(_.kind == "media")
+    Doc(doc.doc_id, if (coverIdx < 0) ordered else ordered.patch(coverIdx, Nil, 1))
+  }
+
+  /** The span dispatch over a doc's content (as returned by [[content]]),
+    * in the order given:
     *  - kind='media' → decode + recognize (crop config looked up per doc,
     *    J1 joradp_parse.py:84-90);
     *  - kind='text'  → HTML boilerplate strip.
     */
-  def extractDoc(doc: Doc, store: MediaStore, stats: KernelStats): Doc = {
+  def extractContent(doc: Doc, store: MediaStore, stats: KernelStats): Doc = {
     val crop = CropConfig.lookup(doc.doc_id)
-    val ordered = doc.spans.sortBy(_.offset)
-    val coverIdx = ordered.indexWhere(_.kind == "media")
-    val out = Vector.newBuilder[Span]
-    var i = 0
-    while (i < ordered.length) {
-      val s = ordered(i)
-      if (i != coverIdx) {
-        s.kind match {
-          case "media" =>
-            val page = Recognize.recognizeStored(store.decode(s.media_ref), crop)
-            stats.addHist(page.confHist)
-            out += Span("media", page.text, s.media_ref, s.offset)
-            stats.mediaSpanCount += 1
-          case "text" =>
-            out += Span("text", BoilerplateStrip.strip(s.text), "", s.offset)
-            stats.textSpanCount += 1
-          case other =>
-            throw new IllegalArgumentException(
-              s"unknown span kind '$other' in ${doc.doc_id}")
-        }
-        stats.spanCount += 1
+    val out = doc.spans.map { s =>
+      val span = s.kind match {
+        case "media" =>
+          val page = Recognize.recognizeStored(store.decode(s.media_ref), crop)
+          stats.addHist(page.confHist)
+          stats.mediaSpanCount += 1
+          Span("media", page.text, s.media_ref, s.offset)
+        case "text" =>
+          stats.textSpanCount += 1
+          Span("text", BoilerplateStrip.strip(s.text), "", s.offset)
+        case other =>
+          throw new IllegalArgumentException(
+            s"unknown span kind '$other' in ${doc.doc_id}")
       }
-      i += 1
+      stats.spanCount += 1
+      span
     }
     stats.docCount += 1
-    Doc(doc.doc_id, out.result())
+    Doc(doc.doc_id, out)
   }
+
+  /** Extract one document: [[content]] then [[extractContent]]. */
+  def extractDoc(doc: Doc, store: MediaStore, stats: KernelStats): Doc =
+    extractContent(content(doc), store, stats)
 
   def extractDoc(doc: Doc): Doc = extractDoc(doc, SyntheticStore, new KernelStats)
 }

@@ -529,12 +529,20 @@ object CorpusOps {
     val groupId = sc.getLocalProperty("spark.jobGroup.id")
     val jobDesc = sc.getLocalProperty("spark.job.description")
     val interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+    // The audit's jobs also carry a tag of their own, so a failure of the
+    // rounds below cancels exactly them; `abandoned` stops an audit that
+    // has not started yet.
+    val auditTag = s"d10-audit-${System.nanoTime()}"
+    val abandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
     val auditFut = scala.concurrent.Future {
       if (groupId != null)
         sc.setJobGroup(groupId,
           if (jobDesc != null) jobDesc else "d10 audit",
           interruptOnCancel = interrupt != null && interrupt.toBoolean)
-      missedDf.count()
+      sc.addJobTag(auditTag)
+      try {
+        if (abandoned.get) 0L else missedDf.count()
+      } finally sc.removeJobTag(auditTag) // the pool thread is shared
     }(scala.concurrent.ExecutionContext.global)
     // no per-round persist/localCheckpoint (r6): RDD shuffle outputs are
     // implicit checkpoints — each round's count() schedules the full
@@ -549,44 +557,55 @@ object CorpusOps {
     // retry re-counting are both harmless.
     var labels = nodes.rdd.map(r => { val v = r.getLong(0); (v, v) })
       .partitionBy(part)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val chgAcc = s.sparkContext.longAccumulator(s"d10.chg.round$rounds")
-      // neighbour-min: narrow join (both sides partitioned by `part`),
-      // then one dst-keyed min shuffle
-      val msgs = edgesBi.join(labels, part)
-        .map { case (_, (dst, lbl)) => (dst, lbl) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      val minned = labels.leftOuterJoin(msgs, part) // narrow on both sides
-        .mapValues { case (lbl, nbr) =>
-          val nl = nbr.fold(lbl)(math.min(lbl, _))
-          if (nl < lbl) chgAcc.add(1L)
-          nl
-        }
-      // pointer jump lbl := lbl(lbl): the (lbl, vec_id) side shuffles by
-      // label; the lookup side is `minned`, already partitioned by key
-      val jumped = minned.map { case (v, l) => (l, v) }
-        .leftOuterJoin(minned, part)
-        .map { case (l, (v, pl)) => (v, pl.getOrElse(l)) }
-        .partitionBy(part)
-      jumped.count() // ONE action per round: materializes + fills chgAcc
-      labels = jumped
-      if (chgAcc.value == 0L) converged = true
-      rounds += 1
+    // Failure paths (a round throws, the audit fails or trips its
+    // require) release both caches and cancel the audit's jobs.
+    var ok = false
+    try {
+      var converged = false
+      var rounds = 0
+      while (!converged && rounds < maxRounds) {
+        val chgAcc = s.sparkContext.longAccumulator(s"d10.chg.round$rounds")
+        // neighbour-min: narrow join (both sides partitioned by `part`),
+        // then one dst-keyed min shuffle
+        val msgs = edgesBi.join(labels, part)
+          .map { case (_, (dst, lbl)) => (dst, lbl) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        val minned = labels.leftOuterJoin(msgs, part) // narrow on both sides
+          .mapValues { case (lbl, nbr) =>
+            val nl = nbr.fold(lbl)(math.min(lbl, _))
+            if (nl < lbl) chgAcc.add(1L)
+            nl
+          }
+        // pointer jump lbl := lbl(lbl): the (lbl, vec_id) side shuffles by
+        // label; the lookup side is `minned`, already partitioned by key
+        val jumped = minned.map { case (v, l) => (l, v) }
+          .leftOuterJoin(minned, part)
+          .map { case (l, (v, pl)) => (v, pl.getOrElse(l)) }
+          .partitionBy(part)
+        jumped.count() // ONE action per round: materializes + fills chgAcc
+        labels = jumped
+        if (chgAcc.value == 0L) converged = true
+        rounds += 1
+      }
+      // the audit verdict gates the result exactly as before — only its
+      // WALL overlapped the propagation rounds
+      val missed = scala.concurrent.Await.result(
+        auditFut, scala.concurrent.duration.Duration.Inf)
+      require(missed == 0,
+        s"d10 audit: LSH blocking missed $missed exact near-dup edge(s) in " +
+        s"the 1/$auditMod vector sample — raise CorpusOps.D9Tables")
+      System.err.println(
+        s"[d10] ${if (converged) "converged" else "ROUND CAP HIT"} after " +
+        s"$rounds round(s) (cap $maxRounds, audit target $auditTarget)")
+      ok = true
+    } finally {
+      if (!ok) {
+        abandoned.set(true)
+        sc.cancelJobsWithTag(auditTag)
+      }
+      edges.unpersist()
+      edgesBi.unpersist(blocking = false)
     }
-    // the audit verdict gates the result exactly as before — only its
-    // WALL overlapped the propagation rounds
-    val missed = scala.concurrent.Await.result(
-      auditFut, scala.concurrent.duration.Duration.Inf)
-    require(missed == 0,
-      s"d10 audit: LSH blocking missed $missed exact near-dup edge(s) in " +
-      s"the 1/$auditMod vector sample — raise CorpusOps.D9Tables")
-    System.err.println(
-      s"[d10] ${if (converged) "converged" else "ROUND CAP HIT"} after " +
-      s"$rounds round(s) (cap $maxRounds, audit target $auditTarget)")
-    edges.unpersist()
-    edgesBi.unpersist(blocking = false)
     import s.implicits._
     // the returned frame is lazy; its job re-reads the final round's
     // shuffle output (all upstream map stages skip), so no cache needs

@@ -194,7 +194,11 @@ object Checkpoint {
     *     repair, done rows can transiently duplicate — harmless for
     *     resume ([[doneDocs]] is distinct) and repaired before
     *     [[doneTotal]] is next consulted, because callers compact (and
-    *     therefore repair) before reading it.
+    *     therefore repair) before reading it;
+    *  3. the manifest commit is a temp-file write plus rename, so it is
+    *     only atomic where rename is: local FS or HDFS. On an object
+    *     store (S3A renames by copy + delete) a crash mid-commit can
+    *     leave a partial manifest, so compaction needs one of the former.
     *
     * A consolidated dir that absorbs an OLDER consolidated dir folds the
     * old manifest into its own, so [[isRecorded]] keeps answering true

@@ -17,25 +17,22 @@ case class OutRow(
     text_span_count: Long,
     conf_hist: Seq[Long])
 
-/** One span routed through the exploded (skew-breaking) path. */
-case class SpanRow(doc_id: String, kind: String, text: String,
-                   media_ref: String, offset: Int, is_cover: Boolean)
-case class SpanOut(doc_id: String, kind: String, text: String,
-                   media_ref: String, offset: Int,
-                   media_cnt: Long, text_cnt: Long, conf_hist: Seq[Long])
-
 /** The production extraction run — the Spark lifecycle equivalent of
   * joradp_parse.py (SURVEY §3.1):
   *
   *   snapshot read → checkpoint anti-join → skew routing →
-  *   one fused map-only mapPartitions(kernel), no exchange →
+  *   one fused map-only kernel stage, no exchange →
   *   write output + lineage + checkpoint.
   *
   * Skew plan (SURVEY §4): documents are atomic units of kernel work, so a
   * multi-hundred-page doc would stall its partition at 4N scale. Docs with
-  * size(spans) >= cfg.skewSpanThreshold are exploded to per-span rows,
-  * processed span-parallel, and reassembled with
-  * groupByKey → sort-by-offset (interleaving restored by `offset`,
+  * size(spans) >= cfg.skewSpanThreshold are split → extracted with the
+  * same kernel → merged: each is cut into one-span pieces of its
+  * cover-dropped content ([[ExtractKernel.content]]), the pieces are
+  * spread over partitions by (doc_id, offset) and run through the same
+  * [[ExtractKernel.extractContent]] as the fused route, and
+  * groupByKey(doc_id) concatenates each doc's pieces in offset order and
+  * sums their counts and histograms (interleaving restored by `offset`,
   * property-tested); everything else takes the narrow fused path with no
   * post-kernel shuffle.
   */
@@ -77,68 +74,48 @@ object ExtractJob {
     // to the exploded path below. part_id keeps its lineage meaning as
     // the physical partition the doc was processed in.
     val fused: Dataset[OutRow] =
-      small.mapPartitions { docs =>
-        val pid = TaskContext.getPartitionId()
-        docs.map { doc =>
-          val st = new KernelStats
-          val out = ExtractKernel.extractDoc(doc, store, st)
-          OutRow(out.doc_id, out.spans, pid, st.spanCount,
-                 st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq)
-        }
-      }
+      small.map(d => extractRow(ExtractKernel.content(d), store))
 
-    // ---- exploded path: span-level parallelism for skewed docs
-    val spanRows: Dataset[SpanRow] = heavy.flatMap { doc =>
-      val ordered = doc.spans.sortBy(_.offset)
-      val coverIdx = ordered.indexWhere(_.kind == "media")
-      ordered.zipWithIndex.map { case (s, i) =>
-        SpanRow(doc.doc_id, s.kind, s.text, s.media_ref, s.offset, i == coverIdx)
-      }
+    // ---- exploded path: span-level parallelism for skewed docs. A doc
+    // with no content spans becomes one empty piece, so it still gets its
+    // (empty) row; `get` yields null on that empty array where `spans[0]`
+    // would throw under ANSI mode.
+    val pieces: Dataset[Doc] = heavy.flatMap { doc =>
+      val c = ExtractKernel.content(doc)
+      if (c.spans.isEmpty) Seq(c) else c.spans.map(s => Doc(c.doc_id, Seq(s)))
     }
-    val spanOuts: Dataset[SpanOut] = spanRows
-      .repartition(cfg.buckets, col("doc_id"), col("offset"))
-      .as[SpanRow]
-      .mapPartitions { it =>
-        it.filter(!_.is_cover).map { s =>
-          val st = new KernelStats
-          val crop = graft.kernel.CropConfig.lookup(s.doc_id)
-          s.kind match {
-            case "media" =>
-              val page = graft.kernel.Recognize.recognizeStored(
-                store.decode(s.media_ref), crop)
-              st.addHist(page.confHist)
-              SpanOut(s.doc_id, "media", page.text, s.media_ref, s.offset,
-                      1L, 0L, st.confHist.toSeq)
-            case "text" =>
-              SpanOut(s.doc_id, "text",
-                      graft.kernel.BoilerplateStrip.strip(s.text), "",
-                      s.offset, 0L, 1L, st.confHist.toSeq)
-            case other =>
-              throw new IllegalArgumentException(s"unknown span kind '$other'")
-          }
-        }
-      }
-    val reassembled: Dataset[OutRow] = spanOuts
+    val reassembled: Dataset[OutRow] = pieces
+      .repartition(cfg.buckets, col("doc_id"),
+                   get(col("spans"), lit(0)).getField("offset"))
+      .as[Doc]
+      .map(extractRow(_, store))
       .groupByKey(_.doc_id)
-      .mapGroups { (docId, it) =>
-        val ss = it.toVector.sortBy(_.offset) // restore interleaving
-        val hist = new Array[Long](10)
-        var media = 0L
-        var text = 0L
-        for (s <- ss) {
-          var i = 0
-          while (i < 10) { hist(i) += s.conf_hist(i); i += 1 }
-          media += s.media_cnt
-          text += s.text_cnt
+      .mapGroups { (docId, rows) =>
+        val st = new KernelStats
+        val spans = Vector.newBuilder[Span]
+        for (r <- rows) {
+          spans ++= r.spans
+          st.spanCount += r.span_count
+          st.mediaSpanCount += r.media_span_count
+          st.textSpanCount += r.text_span_count
+          st.addHist(r.conf_hist)
         }
-        OutRow(docId,
-               ss.map(s => Span(s.kind, s.text, s.media_ref, s.offset)),
-               TaskContext.getPartitionId(), ss.length.toLong, media, text,
-               hist.toSeq)
+        outRow(Doc(docId, spans.result().sortBy(_.offset)), st) // restore interleaving
       }
 
     fused.union(reassembled)
   }
+
+  /** The row builder both routes share: run the kernel over `content`
+    * (cover already dropped) and attach its stats. */
+  private def extractRow(content: Doc, store: MediaStore): OutRow = {
+    val st = new KernelStats
+    outRow(ExtractKernel.extractContent(content, store, st), st)
+  }
+
+  private def outRow(doc: Doc, st: KernelStats): OutRow =
+    OutRow(doc.doc_id, doc.spans, TaskContext.getPartitionId(), st.spanCount,
+           st.mediaSpanCount, st.textSpanCount, st.confHist.toSeq)
 
   final case class RunSummary(snapshotId: String, docsProcessed: Long,
                               docsThisRun: Long)

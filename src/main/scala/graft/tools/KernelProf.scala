@@ -83,26 +83,23 @@ object KernelProf {
     for (rep <- 1 to reps) {
       var tDecode = 0.0; var tRecog = 0.0; var tStrip = 0.0
       var nMedia = 0; var nText = 0
+      // a timing-only split of the kernel's dispatch over the same
+      // cover-dropped spans, so decode, recognize and strip get their
+      // own clocks
       for (doc <- inputs) {
         val crop = graft.kernel.CropConfig.lookup(doc.doc_id)
-        val ordered = doc.spans.sortBy(_.offset)
-        val coverIdx = ordered.indexWhere(_.kind == "media")
-        var i = 0
-        while (i < ordered.length) {
-          val s = ordered(i)
-          if (i != coverIdx) s.kind match {
-            case "media" =>
-              val (g, td) = time(PageRenderer.decode(s.media_ref))
-              tDecode += td
-              val (_, tr) = time(graft.kernel.Recognize.recognizeStored(g, crop))
-              tRecog += tr
-              nMedia += 1
-            case _ =>
-              val (_, ts) = time(graft.kernel.BoilerplateStrip.strip(s.text))
-              tStrip += ts
-              nText += 1
+        for (s <- graft.kernel.ExtractKernel.content(doc).spans) {
+          if (s.kind == "media") {
+            val (g, td) = time(PageRenderer.decode(s.media_ref))
+            tDecode += td
+            val (_, tr) = time(graft.kernel.Recognize.recognizeStored(g, crop))
+            tRecog += tr
+            nMedia += 1
+          } else {
+            val (_, ts) = time(graft.kernel.BoilerplateStrip.strip(s.text))
+            tStrip += ts
+            nText += 1
           }
-          i += 1
         }
       }
       System.err.println(

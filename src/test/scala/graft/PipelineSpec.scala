@@ -57,10 +57,51 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       ExtractJob.Config(buckets = 4, skewSpanThreshold = Int.MaxValue))
     val explodedOnly = ExtractJob.extract(spark, ds,
       ExtractJob.Config(buckets = 4, skewSpanThreshold = 0))
-    val f = fusedOnly.collect().map(r => Doc(r.doc_id, r.spans)).toSeq
-    val e = explodedOnly.collect().map(r => Doc(r.doc_id, r.spans)).toSeq
-    assertSpanEquality(f, goldens)
-    assertSpanEquality(e, goldens)
+    val fRows = fusedOnly.collect().toSeq
+    val eRows = explodedOnly.collect().toSeq
+    assertSpanEquality(fRows.map(r => Doc(r.doc_id, r.spans)), goldens)
+    assertSpanEquality(eRows.map(r => Doc(r.doc_id, r.spans)), goldens)
+    // the lineage metadata of both routes must agree too
+    assert(lineageMeta(eRows) == lineageMeta(fRows))
+  }
+
+  /** Per-doc lineage columns of extracted rows (part_id aside). */
+  private def lineageMeta(rows: Seq[OutRow]): Map[String, (Long, Long, Long, Seq[Long])] =
+    rows.map(r => r.doc_id -> (r.span_count, r.media_span_count,
+                               r.text_span_count, r.conf_hist.toSeq)).toMap
+
+  test("exploded route keeps docs with no content spans") {
+    import spark.implicits._
+    val (inputs, _) = CorpusGen.corpus(3)
+    val empty = Doc(CorpusGen.docIdFor(100), Seq.empty)
+    val coverOnly = Doc(CorpusGen.docIdFor(101), Seq(
+      Span("media", "", s"synth://${CorpusGen.docIdFor(101)}/0", 0)))
+    val ds = (inputs ++ Seq(empty, coverOnly)).toDS
+    def rows(threshold: Int): Map[String, OutRow] =
+      ExtractJob.extract(spark, ds,
+        ExtractJob.Config(buckets = 4, skewSpanThreshold = threshold))
+        .collect().map(r => r.doc_id -> r.copy(part_id = 0)).toMap
+    val fused = rows(Int.MaxValue)
+    val exploded = rows(0)
+    assert(exploded.size == inputs.size + 2)
+    assert(exploded == fused)
+    assert(exploded(empty.doc_id).spans.isEmpty)
+    assert(exploded(coverOnly.doc_id).spans.isEmpty)
+  }
+
+  test("an unknown span kind on the exploded route names its doc") {
+    import spark.implicits._
+    val (inputs, _) = CorpusGen.corpus(1)
+    val bad = inputs.head.copy(spans =
+      inputs.head.spans :+ Span("video", "", "", inputs.head.spans.map(_.offset).max + 1))
+    val e = intercept[Exception] {
+      ExtractJob.extract(spark, Seq(bad).toDS,
+        ExtractJob.Config(buckets = 4, skewSpanThreshold = 0)).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(msgs.exists(_.contains(s"unknown span kind 'video' in ${bad.doc_id}")),
+      e.toString)
   }
 
   test("resume: a second run reprocesses nothing and duplicates nothing") {
